@@ -12,11 +12,16 @@ entirely.  Above the threshold (billion-node graphs / continental rasters)
 the hint is withheld and the planner keeps the shuffle join — the decision
 input is a measured count and the session's threshold, never a constant
 tuned for the local test scale.
+
+The same rule (:func:`fits_broadcast`) decides when a graph is small
+enough to solve in one task instead of in distributed rounds
+(``graph.pagerank``, ``dedup.connected_components``): a state that fits a
+broadcast fits one task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
@@ -35,12 +40,16 @@ def parse_bytes(raw: str | None) -> int:
         return -1
 
 
+def fits_broadcast(spark: SparkSession, n_rows: int, bytes_per_row: int) -> bool:
+    """True when ``n_rows * bytes_per_row`` fits under the session's
+    autoBroadcastJoinThreshold (never when the threshold is disabled)."""
+    thr = parse_bytes(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "-1"))
+    return thr > 0 and n_rows * bytes_per_row <= thr
+
+
 def maybe_broadcast(df: DataFrame, n_rows: int, bytes_per_row: int) -> DataFrame:
-    """Broadcast-hint ``df`` when ``n_rows * bytes_per_row`` fits under the
-    session's autoBroadcastJoinThreshold; otherwise return it unchanged."""
-    thr = parse_bytes(
-        df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "-1")
-    )
-    if thr > 0 and n_rows * bytes_per_row <= thr:
+    """Broadcast-hint ``df`` when it :func:`fits_broadcast`; otherwise
+    return it unchanged."""
+    if fits_broadcast(df.sparkSession, n_rows, bytes_per_row):
         return F.broadcast(df)
     return df

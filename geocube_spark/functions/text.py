@@ -64,23 +64,6 @@ def _in_markers(markers: list[str]):
     return lambda t: F.array_contains(arr, t)
 
 
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    """stopword hits / token count for one language's marker set."""
-    markers = LANG_MARKERS[lang]
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-    hits = F.size(F.filter(toks, _in_markers(markers)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
-def stopword_ratio_sql(c: str, lang: str = "en") -> str:
-    markers = ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
-    toks = f"regexp_split_to_array(lower(trim({c})), '\\s+')"
-    return (
-        f"len(list_filter({toks}, t -> t IN ({markers})))"
-        f" / greatest(len({toks}), 1)"
-    )
-
-
 def quality_score(col: Column) -> Column:
     """Composite quality score in [0,1]: length norm + low punctuation +
     mean-word-length sanity.  Deterministic, SQL-expressible."""

@@ -1,18 +1,15 @@
 """Vector kernels for similarity search & near-dup detection.
 
 Hot-path math stays JVM-side: dot products and norms via F.zip_with +
-F.aggregate over array<float> columns (whole-stage codegen), with numpy
-pandas-UDF variants for batch-heavy paths (brute-force top-k over many
-query vectors).
+F.aggregate over array<float> columns (whole-stage codegen), MinHash and
+SimHash signatures, and shingle sets — no Python.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -43,23 +40,6 @@ def cosine_sql(a: str, b: str) -> str:
     )
 
 
-def normalize_udf():
-    """pandas UDF: L2-normalize an embedding column (pre-normalizing turns
-    cosine top-k into dot-product top-k — half the math at query time)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def l2_normalize(vec: pd.Series) -> pd.Series:
-        def f(v):
-            a = np.asarray(v, dtype=np.float64)
-            n = np.linalg.norm(a)
-            return (a / n).tolist() if n > 0 else a.tolist()
-
-        return vec.apply(f)
-
-    return l2_normalize
-
-
 # ------------------------------------------------------------------- MinHash
 
 # Universal-hash family h_i(x) = (a_i * x + b_i) mod p — deterministic seeds
@@ -85,23 +65,6 @@ def _let(bound: Column, body) -> Column:
     shingle position.  ``transform(array(x), v -> body(v))[1]`` is the
     expression-level let-binding that keeps the one-Column API."""
     return F.element_at(F.transform(F.array(bound), body), 1)
-
-
-def shingles_expr(col: Column, k: int = 5) -> Column:
-    """Character k-shingle set of normalized text as array<string> (distinct).
-
-    Built from sequence+transform+substring — JVM-side, no Python.  The
-    normalized string is let-bound so it normalizes once per row, not once
-    per shingle position (see :func:`_let`)."""
-    normalized = F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-
-    def body(s: Column) -> Column:
-        n = F.greatest(F.length(s) - F.lit(k - 1), F.lit(1))
-        return F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n), lambda i: F.substring(s, i, F.lit(k)))
-        )
-
-    return _let(normalized, body)
 
 
 def word_shingles_expr(col: Column, k: int = 3) -> Column:
@@ -212,17 +175,3 @@ def simhash_expr(tokens: Column, bits: int = 64) -> Column:
 
 def hamming_distance_expr(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
-
-
-# ------------------------------------------------------------ numpy batch ops
-
-
-def topk_dot_numpy(query: np.ndarray, matrix: np.ndarray, k: int):
-    """Brute-force top-k by dot product, vectorized (one GEMV per batch)."""
-    scores = matrix @ query
-    if k >= len(scores):
-        idx = np.argsort(-scores)
-    else:
-        part = np.argpartition(-scores, k)[:k]
-        idx = part[np.argsort(-scores[part])]
-    return idx, scores[idx]

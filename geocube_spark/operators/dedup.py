@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geocube_spark.functions.joinpick import fits_broadcast
 from geocube_spark.functions.text import normalized_md5
 from geocube_spark.functions.vectors import (
     _MERSENNE_P,
@@ -741,21 +742,20 @@ def simhash_near_duplicates(
 
 # ------------------------------------------------------------- components
 
-# below this many distinct edges the star rounds are pure fixed cost and
-# a single task labels the whole graph (~8 bytes x 2 x edges of state)
-_CC_SMALL_EDGE_THRESHOLD = 200_000
-
-
 def _union_find_single_task(edges: DataFrame) -> DataFrame:
-    """(node, component) via one-task union-find over a SMALL edge set —
-    union-by-min + path compression, so the root of every tree is the
-    component minimum (the same labels the star rounds converge to)."""
+    """(node, component, component_size) via one-task union-find over a
+    SMALL edge set — union-by-min + path compression, so the root of every
+    tree is the component minimum (the same labels the star rounds
+    converge to); the sizes are counted over the roots in the same task."""
+    from collections import Counter
+
     from pyspark.sql.types import LongType, StructField, StructType
 
     schema = StructType(
         [
             StructField("node", LongType(), False),
             StructField("component", LongType(), False),
+            StructField("component_size", LongType(), False),
         ]
     )
 
@@ -776,8 +776,10 @@ def _union_find_single_task(edges: DataFrame) -> DataFrame:
                 if ru != rv:
                     parent[max(ru, rv)] = min(ru, rv)
         nodes = list(parent.keys())
+        roots = [find(n) for n in nodes]
+        sizes = Counter(roots)
         yield pd.DataFrame(
-            {"node": nodes, "component": [find(n) for n in nodes]}
+            {"node": nodes, "component": roots, "component_size": [sizes[r] for r in roots]}
         )
 
     return edges.coalesce(1).mapInPandas(run, schema)
@@ -793,25 +795,36 @@ def connected_components(
     """Connected components over a near-duplicate pair graph -> per-doc
     cluster labels (component id = smallest doc_id in the component).
 
-    The pair producers (minhash/simhash/embedding near-dup joins) emit
-    *edges*; dedup policy needs *clusters* ("keep one doc per component").
-    This is the alternating large-star / small-star algorithm (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14): each
-    round reattaches nodes to the minimum of their neighborhood, and the
-    edge set converges to stars centered on component minima in
-    O(log n) rounds — NOT O(diameter) like naive min-label propagation, so
-    chain-shaped duplicate clusters (crawl mirrors) don't serialize.
-
-    Spark shape per round: two hash-shuffle groupBys (the per-node min) +
-    one distinct; no collect_set adjacency lists, so a hot node (a doc
-    paired with millions) never materializes its neighborhood in one task
-    — its edges stay spread across partitions and only its min survives
-    the agg.  Driver sees ONE scalar (count, checksum) per round for the
-    convergence test; lineage is cut per round with localCheckpoint (at
-    cluster scale: spark.sparkContext.setCheckpointDir + .checkpoint()).
-
     Returns (node, component, component_size), one row per distinct doc id
-    appearing in ``pairs``.
+    appearing in ``pairs``.  The pair producers (minhash/simhash/embedding
+    near-dup joins) emit *edges*; dedup policy needs *clusters* ("keep one
+    doc per component").
+
+    Two paths, one answer.  The distinct edge list is checkpointed and
+    counted first; the count picks the path:
+
+    * **One task** when the edge list fits a broadcast — rows x 128 bytes
+      under the session's ``spark.sql.autoBroadcastJoinThreshold``, the
+      same rule (``joinpick.fits_broadcast``) that hints the iterative
+      operators' broadcast joins and gates ``graph.pagerank``'s one-task
+      solve.  ``coalesce(1)`` + ``mapInPandas`` runs union-by-min with path
+      compression and counts each component's size in the same task: no
+      rounds, no size join, no driver collect.
+    * **Distributed rounds** otherwise (and always when salted): the
+      alternating large-star / small-star algorithm (Kiveris et al.,
+      "Connected Components in MapReduce and Beyond", SoCC'14).  Each
+      round reattaches nodes to the minimum of their neighborhood, and the
+      edge set converges to stars centered on component minima in
+      O(log n) rounds — NOT O(diameter) like naive min-label propagation,
+      so chain-shaped duplicate clusters (crawl mirrors) don't serialize.
+      Per round: two hash-shuffle groupBys (the per-node min) + one
+      distinct; no collect_set adjacency lists, so a hot node never
+      materializes its neighborhood in one task.  The driver sees ONE
+      scalar (count, checksum) per round for the convergence test; lineage
+      is cut per round with localCheckpoint.
+
+    Both paths label every component by its minimum, so the rows are
+    identical whichever path runs.
 
     ``salt_buckets > 1`` turns on SKEW HARDENING for power-law duplicate
     graphs (one doc paired with a large fraction of the corpus — crawl
@@ -901,25 +914,12 @@ def connected_components(
 
     edges, prev = _checkpoint_and_sign(edges)
 
-    # Size-adaptive fast path (the CC sibling of the size-adaptive spatial
-    # join): below the threshold the O(log n) star rounds are pure fixed
-    # cost — each round is 2 shuffles + a checkpoint — so a SMALL edge set
-    # (stitch graphs, fixture-scale dedup) runs single-task union-find
-    # instead: coalesce(1) + mapInPandas, no driver collect, no rounds.
-    # Union-by-min + path compression yields root = component minimum —
-    # the IDENTICAL labels the star algorithm converges to — and the edge
-    # count is already on the driver from the signature scalar.  Salted
-    # mode (S > 1) exists precisely because the graph is big: keep stars.
-    if S == 1 and 0 < prev[0] <= _CC_SMALL_EDGE_THRESHOLD:
-        labels = _union_find_single_task(edges)
-        sizes = labels.groupBy("component").agg(
-            F.count(F.lit(1)).alias("component_size")
-        )
-        return (
-            labels.select("node", "component")
-            .join(sizes, "component")
-            .select("node", "component", "component_size")
-        )
+    # One-task path: the edge count is already on the driver from the
+    # signature scalar.  128 bytes per edge sizes the task's state: up to
+    # two Python dict entries plus their int objects.  Salted mode (S > 1)
+    # exists precisely because the graph is big: keep stars.
+    if S == 1 and prev[0] > 0 and fits_broadcast(spark, prev[0], 128):
+        return _union_find_single_task(edges)
 
     for _ in range(max_iter):
         edges, cur = _checkpoint_and_sign(small_star(large_star(edges)))

@@ -15,8 +15,6 @@ aggregation applies.  At 100 TB this shuffles exactly one array per
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -100,18 +98,19 @@ def filter_valid_slices(
     nodata: float,
     min_valid_fraction: float,
     px_col: str = "px",
-    block_pixels: int = 4096,
 ) -> DataFrame:
     """F12: drop output blocks whose valid-pixel fraction < threshold.
 
+    A block keeps when it holds at least ``ceil(fraction x size(px))``
+    valid pixels, so every block is judged against its own pixel count.
     The reference applies this per merged SLICE; per-block filtering plus a
     grouped sum reproduces the slice-level decision when needed.
     """
     if min_valid_fraction <= 0:
         return mosaic
-    nd = F.lit(float(nodata))
-    k = int(math.ceil(min_valid_fraction * block_pixels))
-    return mosaic.filter(valid_count_expr(F.col(px_col), nd) >= k)
+    px = F.col(px_col)
+    k = F.ceil(F.lit(float(min_valid_fraction)) * F.size(px))
+    return mosaic.filter(valid_count_expr(px, F.lit(float(nodata))) >= k)
 
 
 def temporal_composite(

@@ -139,7 +139,6 @@ def get_cube(
     flt: DatasetFilters,
     nodata: float,
     min_valid_fraction: float = 0.0,
-    block_pixels: int = 4096,
     bands: list[int] | None = None,
     base_res: float | None = None,
     out_res: float | None = None,
@@ -194,9 +193,7 @@ def get_cube(
     # mosaic per (record-slice is implicit: each record is its own slice in
     # headers; the cube's pixel plane merges ALL matching records per block)
     merged = mosaic_blocks(joined, nodata=nodata)
-    return filter_valid_slices(
-        merged, nodata=nodata, min_valid_fraction=min_valid_fraction, block_pixels=block_pixels
-    )
+    return filter_valid_slices(merged, nodata=nodata, min_valid_fraction=min_valid_fraction)
 
 
 def get_cube_headers(

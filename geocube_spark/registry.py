@@ -4834,7 +4834,7 @@ def valid_pixel_filter(spark, sf_dir):
         "container_uri",
         "left_semi",
     )
-    kept = filter_valid_slices(src, nodata=-32768.0, min_valid_fraction=0.8, block_pixels=4096)
+    kept = filter_valid_slices(src, nodata=-32768.0, min_valid_fraction=0.8)
     return kept.select(
         "container_uri",
         "block_x",

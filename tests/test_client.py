@@ -135,6 +135,42 @@ class TestCubeSurface:
         cube = client.get_cube(pix_flt, nodata=-32768.0).collect()
         assert len(cube) == 4
 
+    def test_min_valid_fraction_judged_per_block_size(self, spark, tmp_path):
+        """A 256^2 block is judged against its own 65536 pixels, not a
+        fixed 4096: at fraction 0.5 the 25%-valid block drops and the
+        75%-valid one keeps."""
+        import numpy as np
+
+        from geocube_spark import schemas
+
+        c = GeocubeClient(spark, str(tmp_path / "block256_catalog"))
+        aoi = c.create_aoi([rect_wkb(10.0, 40.0, 10.08, 40.08)])
+        rid = c.create_records(["BLOCK256"], {"KIND": "TEST"}, [datetime(2021, 1, 1)], aoi)[0]
+        dm = {"dtype": "Float64", "no_data": -1.0, "min_value": -1e6, "max_value": 1e6}
+        iid = c.instantiate_variable(c.create_variable("block256_var", ["B1"], dm), "default")
+        uri = "file:///block256/0.tif"
+        c.index_datasets([{
+            "record_id": rid, "instance_id": iid, "container_uri": uri,
+            "subdir": "", "bands": [1], "status": "ACTIVE",
+            "dmapping": dict(dm, real_min_value=-1e6, real_max_value=1e6, exponent=1.0),
+            "geom_wkb": rect_wkb(10.0, 40.0, 10.08, 40.08),
+            "shape_srid": 4326, "overviews": False, "locked_by_job_id": None,
+        }])
+        n = 256 * 256
+        tr = {"a": 0.01, "b": 0.0, "c": 10.0, "d": 0.0, "e": -0.01, "f": 40.08}
+        tiles = []
+        for bx, valid in enumerate((n // 4, 3 * n // 4)):
+            px = np.full(n, -1.0)
+            px[:valid] = 1.0
+            tiles.append({
+                "container_uri": uri, "band": 1, "level": 0, "block_x": bx,
+                "block_y": 0, "px": px.tolist(), "crs_srid": 4326, "pix_to_crs": tr,
+            })
+        c.catalog.write("tiles", spark.createDataFrame(tiles, schemas.TILE))
+        flt = DatasetFilters(status="ACTIVE", order=False)
+        kept = c.get_cube(flt, nodata=-1.0, min_valid_fraction=0.5).collect()
+        assert [r["block_x"] for r in kept] == [1]
+
     def test_dry_run_impact(self, client):
         impact = client.update_datasets_dry_run(DatasetFilters(status="ACTIVE", order=False))
         assert impact.count() >= 2

@@ -7,6 +7,18 @@ import pytest
 from geocube_spark.operators.dedup import connected_components
 
 
+@pytest.fixture
+def distributed_rounds(spark):
+    """Disable the broadcast threshold for one test: the one-task graph
+    solves share its size gate, so pagerank and connected_components run
+    their distributed rounds whatever the graph's size."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, old)
+
+
 def _union_find(n_nodes, edges):
     parent = {}
 
@@ -78,6 +90,39 @@ def test_components_two_cliques_and_bridge(spark):
     _check(spark, a + b + [(4, 10)])  # bridged: one component
 
 
+def test_components_distributed_path(spark, distributed_rounds):
+    """The star rounds (the path above the size gate) give the same labels
+    and sizes as the one-task union-find."""
+    rng = random.Random(3)
+    edges = [(rng.randrange(120), rng.randrange(120)) for _ in range(90)]
+    _check(spark, [(u, v) for u, v in edges if u != v] + [(i, i + 1) for i in range(200, 240)])
+
+
+def test_small_graph_job_counts(spark):
+    """Job-count guard for the one-task solves: PageRank (5 rounds) and
+    connected components on a small graph cost at most 3 and 4 Spark jobs,
+    where the distributed rounds cost about 30 and 20."""
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    from geocube_spark.operators.graph import pagerank
+
+    pairs = [(i, i + 1) for i in range(0, 60, 2)] + [(5, 9), (9, 13), (13, 40)]
+    e = spark.createDataFrame([(str(u), str(v)) for u, v in pairs], "src string, dst string")
+    p = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    assert jobs("guard-pagerank", lambda: pagerank(e, iterations=5).collect()) <= 3
+    assert jobs("guard-components", lambda: connected_components(p).collect()) <= 4
+
+
 def test_components_empty(spark):
     df = spark.createDataFrame([], "doc_a long, doc_b long")
     assert connected_components(df).count() == 0
@@ -120,7 +165,23 @@ def test_salted_power_law_hub(spark):
     assert all(r["component_size"] == len(out) for r in out)
 
 
+_PR_EDGES = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")]
+
+
 class TestPageRank:
+    """Runs on the one-task numpy path: every graph here fits the
+    session's broadcast threshold.  ``TestPageRankDistributed`` reruns
+    each test on the distributed rounds."""
+
+    one_task = True
+
+    def test_path_taken(self, spark):
+        from geocube_spark.operators.graph import pagerank
+
+        e = spark.createDataFrame(_PR_EDGES, "src string, dst string")
+        plan = pagerank(e)._jdf.queryExecution().executedPlan().toString()
+        assert ("MapInPandas" in plan) == self.one_task
+
     def test_two_node_cycle_uniform(self, spark):
         from geocube_spark.operators.graph import pagerank
 
@@ -165,15 +226,45 @@ class TestPageRank:
                 pagerank_sql("SELECT src, dst FROM pe", iterations=4)
             ).fetchall()
         }
-        e = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")],
-            "src string, dst string",
-        )
+        e = spark.createDataFrame(_PR_EDGES, "src string, dst string")
         got = {
             r["node"]: round(r["rank"], 9)
             for r in pagerank(e, iterations=4).collect()
         }
         assert got == want
+
+    def test_oracle_dangling_and_duplicate_edges(self, spark, duck):
+        """Dangling nodes and repeated edges, to 1e-9: the inflow sums run
+        in a different order in numpy, Spark and DuckDB."""
+        from geocube_spark.operators.graph import pagerank, pagerank_sql
+
+        rng = random.Random(11)
+        edges = [(f"n{rng.randrange(40)}", f"n{rng.randrange(60)}") for _ in range(150)]
+        edges += edges[:20] + [("n1", "sink"), ("n1", "sink")]
+        values = ", ".join(f"('{u}', '{v}')" for u, v in edges)
+        duck.execute(f"CREATE OR REPLACE VIEW pe2 AS SELECT * FROM (VALUES {values}) t(src, dst)")
+        want = dict(duck.sql(pagerank_sql("SELECT src, dst FROM pe2", iterations=6)).fetchall())
+        e = spark.createDataFrame(edges, "src string, dst string")
+        got = {r["node"]: r["rank"] for r in pagerank(e, iterations=6).collect()}
+        assert got.keys() == want.keys()
+        assert max(abs(got[n] - want[n]) for n in want) < 1e-9
+
+    def test_empty_edge_list(self, spark):
+        from geocube_spark.operators.graph import pagerank
+
+        out = pagerank(spark.createDataFrame([], "src string, dst string"))
+        assert out.columns == ["node", "rank"]
+        assert out.collect() == []
+
+
+class TestPageRankDistributed(TestPageRank):
+    """Every ``TestPageRank`` test on the distributed rounds."""
+
+    one_task = False
+
+    @pytest.fixture(autouse=True)
+    def _distributed(self, distributed_rounds):
+        yield
 
 
 class TestLshSkew:

@@ -108,9 +108,9 @@ class TestMosaic:
 
     def test_valid_filter(self, spark):
         out = mosaic_blocks(self._tiles(spark), nodata=-1.0)
-        kept = filter_valid_slices(out, nodata=-1.0, min_valid_fraction=0.5, block_pixels=4)
+        kept = filter_valid_slices(out, nodata=-1.0, min_valid_fraction=0.5)
         assert kept.count() == 1
-        none = filter_valid_slices(out, nodata=-1.0, min_valid_fraction=1.1, block_pixels=4)
+        none = filter_valid_slices(out, nodata=-1.0, min_valid_fraction=1.1)
         assert none.count() == 0
 
     def test_nan_nodata(self, spark):

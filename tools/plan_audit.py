@@ -63,7 +63,6 @@ HARD_RULES_EXEMPT_BNLJ = {
     "bloom_decontamination",   # 1-row dense filter-word-array broadcast (the
                                # whole Bloom filter as one array<long> row —
                                # the map-side probe design)
-    "graph_pagerank",          # 1-row dangling-mass broadcast (final round)
     "quality_classifier_train",  # 1-row weights broadcast per GD round (R+1 total)
     # bbox interval joins against a SMALL broadcast cell/AOI list — the
     # correct strategy when the dim side fits in a broadcast.  These are

@@ -189,13 +189,11 @@ def summary_line(
     priority = [k for k in by_cost if k in PINNED_SUMMARY_QUERIES] + [
         k for k in by_cost if k not in PINNED_SUMMARY_QUERIES
     ]
-    keep = len(priority)
-    while keep > 1:
+    for keep in range(len(priority), -1, -1):
         kept_names = sorted(priority[:keep], key=lambda k: -timings[k])
         line = dump({k: sig2[k] for k in kept_names}, len(timings) - keep)
         if len(line) <= TAIL_BUDGET:
-            return line
-        keep -= 1
+            break
     return line
 
 

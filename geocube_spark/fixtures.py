@@ -7,8 +7,12 @@ DuckDB oracle read the exact same bytes.  Pixel values are closed-form
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
 import os
+import shutil
 import uuid
+from collections.abc import Callable
 from datetime import datetime, timedelta
 
 import numpy as np
@@ -44,6 +48,58 @@ def default_dir() -> str:
     return os.environ.get(
         "GEOCUBE_FIXTURE_DIR", os.path.join(os.path.dirname(__file__), "..", ".fixtures")
     )
+
+
+def _input_key(inputs: list[str]) -> str:
+    """sha256 over the bytes of every input file, each paired with its
+    name; a directory contributes its files in sorted relative-path
+    order.  No stat() field enters the key, so a copy of the same bytes
+    (another host, a fresh checkout, a touched file) keys the same."""
+    h = hashlib.sha256()
+    for root in inputs:
+        if os.path.isdir(root):
+            rels = sorted(
+                os.path.relpath(os.path.join(d, n), root)
+                for d, _, names in os.walk(root)
+                for n in names
+            )
+            files = [(rel, os.path.join(root, rel)) for rel in rels]
+        else:
+            files = [(os.path.basename(root), root)]
+        for rel, path in files:
+            with open(path, "rb") as f:
+                digest = hashlib.file_digest(f, "sha256").hexdigest()
+            h.update(f"{rel}\0{digest}\n".encode())
+    return h.hexdigest()
+
+
+def cached(out: str, inputs: list[str], build: Callable[[str], object]) -> str:
+    """The one cache rule for derived fixtures: return ``out``, first
+    (re)building it with ``build(out)`` unless the marker ``out + ".key"``
+    holds the key of ``inputs`` (see ``_input_key``).
+
+    Check and build run under an exclusive ``flock`` on ``out + ".lock"``,
+    so concurrent threads and processes build once.  A rebuild removes the
+    marker and the old output, builds, and writes the marker LAST: the
+    marker is the commit point, so a build that dies leaves no marker and
+    the next call builds again."""
+    marker = out + ".key"
+    with open(out + ".lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)  # released when the file closes
+        key = _input_key(inputs)
+        if os.path.exists(marker):
+            with open(marker) as f:
+                if f.read() == key:
+                    return out
+            os.remove(marker)
+        if os.path.isdir(out):
+            shutil.rmtree(out)
+        elif os.path.exists(out):
+            os.remove(out)
+        build(out)
+        with open(marker, "w") as f:
+            f.write(key)
+    return out
 
 
 def generate(out_dir: str | None = None, n_records: int = 200) -> str:

@@ -1166,7 +1166,6 @@ def ivf_build_index(
     id_col: str = "vec_id",
     seed: int = 42,
     centroids: list[list[float]] | None = None,
-    meta: dict | None = None,
 ) -> list[list[float]]:
     """Materialize the IVF layout: cluster id as a PERSISTED PARTITION
     COLUMN (``index_path/cluster=N/``), centroids in a small sidecar JSON.
@@ -1189,7 +1188,7 @@ def ivf_build_index(
         "cluster", ivf_assign_udf(cents)(F.col(vec_col))
     )
     assigned.write.partitionBy("cluster").mode("overwrite").parquet(index_path)
-    sidecar = {"centroids": cents, "meta": dict(meta or {})}
+    sidecar = {"centroids": cents, "meta": {}}
     _fs_write_text(
         embeddings.sparkSession, _centroids_sidecar(index_path), json.dumps(sidecar)
     )
@@ -1228,19 +1227,10 @@ def _fs_read_text(spark, path: str) -> str:
     return bytes(baos.toByteArray()).decode("utf-8")
 
 
-def ivf_sidecar_exists(index_path: str) -> bool:
-    try:
-        ivf_load_sidecar(index_path)
-        return True
-    except (FileNotFoundError, OSError):
-        return False
-
-
 def ivf_load_sidecar(index_path: str) -> dict:
     """Full sidecar: {"centroids": [...], "meta": {...}}.  Reads through the
     Hadoop FS layer when a SparkSession is active (remote schemes work);
-    falls back to a plain local open otherwise.  Pre-r5 sidecars that were a
-    bare centroid list are promoted to the dict shape with empty meta."""
+    falls back to a plain local open otherwise."""
     import json
 
     from pyspark.sql import SparkSession
@@ -1252,10 +1242,7 @@ def ivf_load_sidecar(index_path: str) -> dict:
     else:
         with open(path) as f:
             raw = f.read()
-    obj = json.loads(raw)
-    if isinstance(obj, list):
-        return {"centroids": obj, "meta": {}}
-    return obj
+    return json.loads(raw)
 
 
 def ivf_load_centroids(index_path: str) -> list[list[float]]:

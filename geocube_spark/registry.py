@@ -18,13 +18,13 @@ DuckDB 1.0 dialect notes (tested):
 
 from __future__ import annotations
 
-import hashlib
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geocube_spark.fixtures import cached
 from geocube_spark.functions.dataformat import cast_expr, cast_sql
 from geocube_spark.functions.text import (
     bpe_ish_token_count,
@@ -77,8 +77,8 @@ def ensure_consolidated(spark: SparkSession) -> str:
     partitioned by cell, physically sorted by the interlacing pattern, so a
     time-series read of one block is a contiguous partition-pruned scan —
     the reference's docs/architecture/mucog.md benchmark restated."""
-    out = os.path.join(FIXTURE_DIR, "consolidated_tiles")
-    if not os.path.exists(out):
+
+    def build(out):
         from geocube_spark.operators.consolidation import consolidate_tiles
 
         fd = ensure_fixtures()
@@ -104,7 +104,8 @@ def ensure_consolidated(spark: SparkSession) -> str:
             .withColumn("cell_uri", F.concat_ws("_", "block_x", "block_y"))
         )
         consolidate_tiles(joined, "Z=0>T>R>B", out)
-    return out
+
+    return cached(os.path.join(FIXTURE_DIR, "consolidated_tiles"), [], build)
 
 
 def ensure_pyramided(spark: SparkSession) -> str:
@@ -113,10 +114,8 @@ def ensure_pyramided(spark: SparkSession) -> str:
     plus the AVERAGE level-1 overview, written ``partitionBy("level")`` so
     the O8 auto-selection literal prunes whole level directories at the
     scan."""
-    out = os.path.join(FIXTURE_DIR, "pyramid_tiles")
-    if not os.path.exists(out):
-        from geocube_spark.operators.pyramid import build_level
 
+    def build(out):
         fd = ensure_fixtures()
         tiles = spark.read.parquet(f"{fd}/tiles.parquet")
         datasets = spark.read.parquet(f"{fd}/datasets.parquet")
@@ -131,15 +130,16 @@ def ensure_pyramided(spark: SparkSession) -> str:
         src.select(*lvl1.columns).unionByName(lvl1).write.mode(
             "overwrite"
         ).partitionBy("level").parquet(out)
-    return out
+
+    return cached(os.path.join(FIXTURE_DIR, "pyramid_tiles"), [], build)
 
 
 def ensure_zarr_fixture() -> str:
     """Closed-form Zarr v2 store: 2 bands x 100x100 float64, 32x32 chunks
     (edge chunks overhang and pad with fill -1), zlib compressor, value
     v(b,y,x) = (13x + 7y + 29b) mod 101 — fully re-derivable in SQL."""
-    out = os.path.join(FIXTURE_DIR, "zarr_demo")
-    if not os.path.exists(os.path.join(out, ".zarray")):
+
+    def build(out):
         import numpy as np
 
         from geocube_spark.sources.zarr import write_zarr_array
@@ -153,18 +153,20 @@ def ensure_zarr_fixture() -> str:
             out, arr, chunks=(1, 32, 32), compressor="zlib", fill_value=-1.0,
             attrs={"crs": "EPSG:4326", "transform": [0.01, 0.0, 0.0, 0.0, -0.01, 50.0]},
         )
-    return out
+
+    return cached(os.path.join(FIXTURE_DIR, "zarr_demo"), [], build)
 
 
 def ensure_stac_fixture() -> str:
     """Deterministic STAC item collection (JSONL, 40 items x 2 assets)."""
-    out = os.path.join(FIXTURE_DIR, "stac_items.jsonl")
-    if not os.path.exists(out):
+
+    def build(out):
         from geocube_spark.sources.stac import write_stac_fixture
 
         ensure_fixtures()
         write_stac_fixture(out)
-    return out
+
+    return cached(os.path.join(FIXTURE_DIR, "stac_items.jsonl"), [], build)
 
 
 # ------------------------------------------------------------ entity mapping
@@ -2276,50 +2278,26 @@ def minhash_near_duplicates(spark, sf_dir):
     return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
 
 
-def _table_fingerprint(sf_dir: str, table: str) -> str:
-    """(size, mtime_ns) identity of one source parquet table — the cache
-    key for persisted index fixtures (see _embeddings_fingerprint)."""
-    root = os.path.join(sf_dir, f"{table}.parquet")
-    parts = []
-    if os.path.isdir(root):
-        for dirpath, _, names in os.walk(root):
-            for n in sorted(names):
-                st = os.stat(os.path.join(dirpath, n))
-                parts.append(f"{n}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(root):
-        st = os.stat(root)
-        parts.append(f"{os.path.basename(root)}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.sha1("|".join(parts).encode()).hexdigest()
+def _sf_fixture(prefix: str, sf_dir: str) -> str:
+    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
+    return os.path.join(FIXTURE_DIR, f"{prefix}_{tag}")
 
 
 def ensure_minhash_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the frozen-corpus LSH bucket index once per SF
     (dedup.build_minhash_index over the doc_id % 5 != 0 'already ingested'
-    majority), parquet partitioned by band.  Cache keyed on a fingerprint
-    of the source documents files, like the persisted IVF index."""
-    import json
-    import shutil
+    majority), parquet partitioned by band, keyed on the source documents'
+    bytes."""
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    out = os.path.join(FIXTURE_DIR, f"minhash_index_{tag}")
-    side = os.path.join(out, "_index_meta.json")
-    fp = _table_fingerprint(sf_dir, "documents")
-    stale = True
-    if os.path.exists(side):
-        with open(side) as f:
-            stale = json.load(f).get("source_fp") != fp
-    if stale:
+    def build(out):
         corpus = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 != 0)
-        tmp = out + "__build"
-        shutil.rmtree(tmp, ignore_errors=True)
-        dd.build_minhash_index(corpus).write.mode("overwrite").partitionBy(
-            "band"
-        ).parquet(tmp)
-        shutil.rmtree(out, ignore_errors=True)
-        os.replace(tmp, out)
-        with open(side, "w") as f:
-            json.dump({"source_fp": fp}, f)
-    return out
+        dd.build_minhash_index(corpus).write.partitionBy("band").parquet(out)
+
+    return cached(
+        _sf_fixture("minhash_index", sf_dir),
+        [os.path.join(sf_dir, "documents.parquet")],
+        build,
+    )
 
 
 @q(
@@ -2866,24 +2844,6 @@ def embedding_ivfpq_topk(spark, sf_dir):
     )
 
 
-def _embeddings_fingerprint(sf_dir: str) -> str:
-    """Cheap identity of the source embeddings table: (size, mtime_ns) of
-    every file under embeddings.parquet.  If the SF data is regenerated the
-    fingerprint changes and the cached index is rebuilt, so the persisted
-    index can never silently diverge from the on-the-fly IVF twin."""
-    root = os.path.join(sf_dir, "embeddings.parquet")
-    parts = []
-    if os.path.isdir(root):
-        for dirpath, _, names in os.walk(root):
-            for n in sorted(names):
-                st = os.stat(os.path.join(dirpath, n))
-                parts.append(f"{n}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(root):
-        st = os.stat(root)
-        parts.append(f"{os.path.basename(root)}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.sha1("|".join(parts).encode()).hexdigest()
-
-
 def _scan_partition_pruned(plan: str, probe) -> int:
     """1 iff the executed plan's FileSourceScan carries PartitionFilters on
     ``cluster`` whose literal set contains EVERY probed id.  Parses the
@@ -2906,19 +2866,18 @@ def _scan_partition_pruned(plan: str, probe) -> int:
 def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the persisted IVF layout once per SF: cluster id as a
     partition column + centroid sidecar (similarity.ivf_build_index).
-    The cache is keyed on a fingerprint of the source embeddings files —
-    a regenerated SF table invalidates the committed index."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    out = os.path.join(FIXTURE_DIR, f"ivf_index_{tag}")
-    fp = _embeddings_fingerprint(sf_dir)
-    stale = True
-    if sim.ivf_sidecar_exists(out):
-        stale = sim.ivf_load_sidecar(out).get("meta", {}).get("source_fp") != fp
-    if stale:
-        sim.ivf_build_index(
-            _emb(spark, sf_dir), out, n_clusters=8, meta={"source_fp": fp}
-        )
-    return out
+    Keyed on the source embeddings' bytes, so a regenerated SF table
+    invalidates the committed index and it can never silently diverge
+    from the on-the-fly IVF twin."""
+
+    def build(out):
+        sim.ivf_build_index(_emb(spark, sf_dir), out, n_clusters=8)
+
+    return cached(
+        _sf_fixture("ivf_index", sf_dir),
+        [os.path.join(sf_dir, "embeddings.parquet")],
+        build,
+    )
 
 
 @q(
@@ -2968,25 +2927,20 @@ def embedding_ivf_indexed(spark, sf_dir):
 def ensure_ivf_appended_index(spark: SparkSession, sf_dir: str) -> str:
     """The INCREMENTAL-GROWTH twin of ensure_ivf_index: build the index
     from the even-vec_id half, then ivf_append the odd half with the
-    frozen quantizer.  Cache keyed on the embeddings fingerprint AND on
-    exactly one recorded append."""
-    import shutil
+    frozen quantizer.  Build and append commit as one cached step."""
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    out = os.path.join(FIXTURE_DIR, f"ivf_index_append_{tag}")
-    fp = _embeddings_fingerprint(sf_dir)
-    stale = True
-    if sim.ivf_sidecar_exists(out):
-        meta = sim.ivf_load_sidecar(out).get("meta", {})
-        stale = meta.get("source_fp") != fp or meta.get("appends") != 1
-    if stale:
-        shutil.rmtree(out, ignore_errors=True)
+    def build(out):
         emb = _emb(spark, sf_dir)
         first = emb.filter(F.col("vec_id") % 2 == 0)
         rest = emb.filter(F.col("vec_id") % 2 == 1)
-        sim.ivf_build_index(first, out, n_clusters=8, meta={"source_fp": fp})
+        sim.ivf_build_index(first, out, n_clusters=8)
         sim.ivf_append(rest, out)
-    return out
+
+    return cached(
+        _sf_fixture("ivf_index_append", sf_dir),
+        [os.path.join(sf_dir, "embeddings.parquet")],
+        build,
+    )
 
 
 @q(
@@ -4999,12 +4953,11 @@ _CRUD_AOI = (-170.0, -40.0, -166.0, -38.0)
 
 
 def ensure_crud_catalog(spark: SparkSession) -> str:
-    from geocube_spark.client import GeocubeClient
-    from geocube_spark.functions.geometry import rect_wkb
+    def build(root):
+        from geocube_spark.client import GeocubeClient
+        from geocube_spark.functions.geometry import rect_wkb
 
-    root = os.path.join(FIXTURE_DIR, "crud_catalog")
-    client = GeocubeClient(spark, root)
-    if not client.catalog.exists("cells"):
+        client = GeocubeClient(spark, root)
         client.create_grid(
             "crud_mgrs",
             "two UTM-zone cells created through the API",
@@ -5014,11 +4967,11 @@ def ensure_crud_catalog(spark: SparkSession) -> str:
                 for cid, srid, rect in _CRUD_CELLS
             ],
         )
-    if not client.catalog.exists("layouts"):
         client.create_layout(
             "crud_layout", {"grid": "crud_mgrs", "resolution": "10"}
         )
-    return root
+
+    return cached(os.path.join(FIXTURE_DIR, "crud_catalog"), [], build)
 
 
 def _crud_cover_oracle() -> str:
@@ -5141,38 +5094,28 @@ def reconsolidation_need(spark, sf_dir):
 _CSLD_INSTANCE_0 = "888ae788-dbc4-5f8a-82a1-4244d4315d66"  # fixtures._uuid("instance", 0)
 
 
+def _code_files(*rels: str) -> list[str]:
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    return [os.path.join(pkg, rel) for rel in rels]
+
+
 def ensure_consolidate_job(spark: SparkSession) -> str:
     """Run ``client.consolidate()`` ONCE over a copy of the fixture catalog
     (job id deterministic in the job name, task ids deterministic in the
     job+container, so re-runs are byte-stable).  The fixture's job-0 locks
     are released first — the conflict arm is covered in
-    tests/test_client.py::TestConsolidateOrchestration."""
+    tests/test_client.py::TestConsolidateOrchestration.
+
+    Keyed to the code that PRODUCES the catalog, so a change to the
+    planning path regenerates the fixture instead of hash-checking a stale
+    frozen catalog (the oracle would otherwise keep passing against output
+    the current code no longer emits)."""
     import shutil
 
-    root = os.path.join(FIXTURE_DIR, "consolidate_job_catalog")
-    marker = os.path.join(root, "_done")
-    # the marker is keyed to a hash of the code that PRODUCES the catalog,
-    # so a change to the planning path regenerates the fixture instead of
-    # hash-checking a stale frozen catalog (the oracle would otherwise keep
-    # passing against output the current code no longer emits)
-    import hashlib
-
-    pkg = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.sha256()
-    for rel in ("client.py", "operators/consolidation.py",
-                "operators/cover.py", "streaming/jobs.py"):
-        with open(os.path.join(pkg, rel), "rb") as f:
-            h.update(f.read())
-    code_hash = h.hexdigest()
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read().strip() != code_hash:
-                os.remove(marker)
-    if not os.path.exists(marker):
+    def build(root):
         from geocube_spark.client import GeocubeClient
 
         fd = ensure_fixtures()
-        shutil.rmtree(root, ignore_errors=True)
         os.makedirs(root)
         for t in ("aoi", "records", "variables", "instances", "containers",
                   "datasets", "layouts", "consolidation_params", "jobs",
@@ -5200,9 +5143,13 @@ def ensure_consolidate_job(spark: SparkSession) -> str:
             max_records=8,
         )
         c.consolidate("e2e", _CSLD_INSTANCE_0, "e2e_fine")
-        with open(marker, "w") as f:
-            f.write(code_hash)
-    return root
+
+    return cached(
+        os.path.join(FIXTURE_DIR, "consolidate_job_catalog"),
+        _code_files("client.py", "operators/consolidation.py",
+                    "operators/cover.py", "streaming/jobs.py"),
+        build,
+    )
 
 
 @q(
@@ -8676,14 +8623,15 @@ def timeseries_block_read(spark, sf_dir):
 # directly — count and per-name tag/datetime checksums must survive the
 # ingest round trip exactly.
 def ensure_ingested_catalog(spark: SparkSession) -> str:
-    from geocube_spark.sources.catalog import Catalog
+    def build(root):
+        from geocube_spark.sources.catalog import Catalog
 
-    root = os.path.join(FIXTURE_DIR, "ingested_catalog")
-    cat = Catalog(spark, root)
-    if not cat.exists("records"):
         fd = ensure_fixtures()
-        cat.write("records", spark.read.parquet(f"{fd}/records.parquet"))
-    return root
+        Catalog(spark, root).write(
+            "records", spark.read.parquet(f"{fd}/records.parquet")
+        )
+
+    return cached(os.path.join(FIXTURE_DIR, "ingested_catalog"), [], build)
 
 
 @q(
@@ -8884,8 +8832,8 @@ def ensure_mucog_interlaced(spark: SparkSession) -> str:
     (layouts.proto:41-66): ``Z=0>T>R>B;Z=1:>R>T>B`` — timeseries-interlaced
     full resolution, geographically-clustered overviews.  2 records × 4×4
     full-res blocks + their 2×2 level-1 overviews, 16-px tiles."""
-    out = os.path.join(FIXTURE_DIR, "mucog_interlaced_fixture.tif")
-    if not os.path.exists(out):
+
+    def build(out):
         import numpy as np
 
         from geocube_spark.operators.consolidation import consolidate_to_mucog
@@ -8935,7 +8883,10 @@ def ensure_mucog_interlaced(spark: SparkSession) -> str:
         ).collect()[0]
         with open(out, "wb") as f:
             f.write(bytes(row["tiff"]))
-    return out
+
+    return cached(
+        os.path.join(FIXTURE_DIR, "mucog_interlaced_fixture.tif"), [], build
+    )
 
 
 @q(
@@ -9016,8 +8967,8 @@ def ensure_mucog(spark: SparkSession) -> str:
     consolidate_to_mucog → sources/gtiff.write_tiff bytes) from the tile
     fixtures: 12 record images × 2×2 blocks, block-interlaced so a
     time-series of one block is one contiguous byte range."""
-    out = os.path.join(FIXTURE_DIR, "mucog_fixture.tif")
-    if not os.path.exists(out):
+
+    def build(out):
         from geocube_spark.operators.consolidation import consolidate_to_mucog
 
         fd = ensure_fixtures()
@@ -9051,7 +9002,8 @@ def ensure_mucog(spark: SparkSession) -> str:
         ).collect()[0]
         with open(out, "wb") as f:
             f.write(bytes(row["tiff"]))
-    return out
+
+    return cached(os.path.join(FIXTURE_DIR, "mucog_fixture.tif"), [], build)
 
 
 # S5/S6 at the BYTE level: the reference's headline benchmark restated
@@ -9863,8 +9815,8 @@ def oracle_sql() -> dict[str, str]:
 
 def ensure_task_retry_job(spark: SparkSession) -> str:
     """Materialize ONCE the per-task failure-accounting scenario over a
-    copy of the fixture catalog (keyed to a hash of the code that drives
-    it, so any change to the accounting path regenerates the fixture):
+    copy of the fixture catalog (keyed to the code that drives it, so any
+    change to the accounting path regenerates the fixture):
 
       1. consolidate() a one-task-per-record job (max_records=1 world-cell
          layout) on the instance with the most tiled datasets;
@@ -9884,23 +9836,10 @@ def ensure_task_retry_job(spark: SparkSession) -> str:
     import json as _json
     import shutil
 
-    root = os.path.join(FIXTURE_DIR, "task_retry_catalog")
-    marker = os.path.join(root, "_done")
-    pkg = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.sha256()
-    for rel in ("client.py", "operators/consolidation.py", "streaming/jobs.py"):
-        with open(os.path.join(pkg, rel), "rb") as f:
-            h.update(f.read())
-    code_hash = h.hexdigest()
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read().strip() != code_hash:
-                os.remove(marker)
-    if not os.path.exists(marker):
+    def build(root):
         from geocube_spark.client import GeocubeClient
 
         fd = ensure_fixtures()
-        shutil.rmtree(root, ignore_errors=True)
         os.makedirs(root)
         for t in ("aoi", "records", "variables", "instances", "containers",
                   "datasets", "tiles", "layouts", "consolidation_params",
@@ -9984,9 +9923,12 @@ def ensure_task_retry_job(spark: SparkSession) -> str:
         )
         state, deletion_id = c.process_consolidation_job(job)
         assert state == "DONE" and deletion_id, state
-        with open(marker, "w") as f:
-            f.write(code_hash)
-    return root
+
+    return cached(
+        os.path.join(FIXTURE_DIR, "task_retry_catalog"),
+        _code_files("client.py", "operators/consolidation.py", "streaming/jobs.py"),
+        build,
+    )
 
 
 # Per-task failure accounting end-to-end (job.go:676-800 UpdateTask /

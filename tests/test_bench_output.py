@@ -50,3 +50,14 @@ def test_summary_line_pins_round11_set():
     parsed = json.loads(line)
     assert parsed.get("queries_omitted", 0) > 0  # trim definitely happened
     assert set(pinned) <= set(parsed["queries"])  # every pinned query kept
+
+
+def test_summary_line_long_names_trim_to_empty_detail():
+    # two names so long that even one of them overflows the budget: the
+    # trim must go all the way down to an empty detail map
+    timings = {f"q{i}_" + "x" * bench.TAIL_BUDGET: float(i + 1) for i in range(2)}
+    line = bench.summary_line(3.0, timings, 0.1)
+    assert len(line) <= bench.TAIL_BUDGET
+    parsed = json.loads(line)
+    assert parsed["queries"] == {}
+    assert parsed["queries_omitted"] == 2
